@@ -29,10 +29,10 @@ import org.apache.spark.sql.DataFrame
   * `graft.substrate.dir` at a per-writer prefix instead.)
   *
   * Staleness: every key folds in a cheap corpus FINGERPRINT
-  * (name/length/mtime of the input files), so regenerating the corpus
-  * in place derives a NEW leaf — a long-lived JVM can never serve a
-  * stale table for a changed corpus, and the old leaf is never
-  * overwritten under readers.
+  * ([[Tables.fingerprint]]: name/length/mtime of the input files), so
+  * regenerating the corpus in place derives a NEW leaf — a long-lived
+  * JVM can never serve a stale table for a changed corpus, and the old
+  * leaf is never overwritten under readers.
   *
   * Locally the tables land under java.io.tmpdir; on a cluster set
   * `-Dgraft.substrate.dir=` to shared storage.
@@ -151,31 +151,6 @@ object Substrate {
     fs.makeQualified(p).toString
   }
 
-  /** Cheap corpus fingerprint: MD5 over the sorted (relative path,
-    * length, mtime) triples of ALL files under the corpus dir —
-    * recursive, so an in-place regeneration that only swaps leaf files
-    * deep inside a partitioned layout (dir/t.parquet/date=X/part-*)
-    * still changes the digest. No data bytes are read; on a remote FS
-    * this is one batched listFiles RPC per directory level.
-    */
-  private def fingerprint(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    if (fs.exists(p)) {
-      val base = fs.makeQualified(p).toUri.getPath
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val rel = st.getPath.toUri.getPath.stripPrefix(base)
-        buf += s"$rel|${st.getLen}|${st.getModificationTime}"
-      }
-      buf.sorted.foreach(line => md.update((line + "\n").getBytes("UTF-8")))
-    }
-    md.digest().map("%02x".format(_)).mkString.take(12)
-  }
-
   /** Build `plan` once per (kind, corpus dir + fingerprint, keyParts)
     * and return the parquet path of the materialized table; later
     * calls — in this JVM via the memo, in any JVM via the `_SUCCESS`
@@ -204,10 +179,23 @@ object Substrate {
     * should stay bare.
     */
   def readFanout(s: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val df = s.read.parquet(path)
+    val df = Tables.parquet(s, path)
     val target = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (scanSplits(df) < target) df.repartition(target) else df
   }
+
+  /** Split count of `df`'s file scan, read off its planned scan node —
+    * the partitions its FileScanRDD will run. Unlike
+    * `df.rdd.getNumPartitions` this builds no second, deserializing
+    * QueryExecution and generates no code. A DataSource V2 scan
+    * (parquet taken off `spark.sql.sources.useV1SourceList`) has no
+    * such node and falls back to the RDD's count.
+    */
+  private[graft] def scanSplits(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collectFirst {
+      case scan: org.apache.spark.sql.execution.FileSourceScanExec =>
+        scan.inputRDD.getNumPartitions
+    }.getOrElse(df.rdd.getNumPartitions)
 
   /** Generalization of [[materialized]] for NON-parquet artifacts (the
     * extract demo's simulated JSON store, anything whose layout a
@@ -222,7 +210,7 @@ object Substrate {
     // The fingerprint is recomputed on EVERY call (one recursive
     // listing, no data bytes) — never memoized, so an in-place corpus
     // regeneration inside a long-lived JVM keys a fresh leaf.
-    val fp = fingerprint(s, dir)
+    val fp = Tables.fingerprint(s, dir)
     accessCounter.incrementAndGet()
     touchLease(s)
     Caches.model(Seq("substrate", kind, dir, fp) ++ keyParts: _*) {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StringType, StructType, TimestampNTZType, TimestampType}
 
 /** Typed loaders for the driver-provided testdata star schema
   * (see TESTDATA.md). Every operator reads through these so column
@@ -14,13 +14,99 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
   * junctions — onto the TPC-H-ish tables per SURVEY.md §1.
   */
 object Tables {
-  def region(s: SparkSession, dir: String): DataFrame   = s.read.parquet(s"$dir/region.parquet")
-  def nation(s: SparkSession, dir: String): DataFrame   = s.read.parquet(s"$dir/nation.parquet")
-  def customer(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/customer.parquet")
-  def supplier(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/supplier.parquet")
-  def part(s: SparkSession, dir: String): DataFrame     = s.read.parquet(s"$dir/part.parquet")
-  def orders(s: SparkSession, dir: String): DataFrame   = s.read.parquet(s"$dir/orders.parquet")
-  def lineitem(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/lineitem.parquet")
+  def region(s: SparkSession, dir: String): DataFrame   = parquet(s, s"$dir/region.parquet")
+  def nation(s: SparkSession, dir: String): DataFrame   = parquet(s, s"$dir/nation.parquet")
+  def customer(s: SparkSession, dir: String): DataFrame = parquet(s, s"$dir/customer.parquet")
+  def supplier(s: SparkSession, dir: String): DataFrame = parquet(s, s"$dir/supplier.parquet")
+  def part(s: SparkSession, dir: String): DataFrame     = parquet(s, s"$dir/part.parquet")
+  def orders(s: SparkSession, dir: String): DataFrame   = parquet(s, s"$dir/orders.parquet")
+  def lineitem(s: SparkSession, dir: String): DataFrame = parquet(s, s"$dir/lineitem.parquet")
+
+  /** `s.read.parquet(path)` that infers each path's schema once per
+    * JVM. A bare parquet read launches a one-task Spark job that reads
+    * a footer to infer the schema; a read with the schema supplied
+    * launches none. graft's table, view and substrate-leaf reads go
+    * through here, so a long-lived session serving many small queries
+    * pays that job once per table, not once per table per query.
+    *
+    * Staleness contract:
+    *  - An entry is keyed on the path qualified against its own
+    *    FileSystem, and holds the schema together with the values of
+    *    every conf that can change an inferred parquet schema
+    *    (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+    *    `spark.sql.caseSensitive`, and partition-column type
+    *    inference) and the path's [[fingerprint]]. A read whose confs
+    *    or fingerprint differ re-infers and replaces the entry, so the
+    *    memo holds at most one entry per path.
+    *  - The fingerprint is one recursive listing (name, length, mtime
+    *    of every file; no data bytes), recomputed on every read, so a
+    *    table rewritten in place — new part files, an added column —
+    *    is seen by the next read.
+    *  - The residual case is a rewrite that keeps every file's name,
+    *    length AND mtime; it is invisible here exactly as it is to
+    *    [[Substrate]]'s leaf keys, which share the fingerprint.
+    *  - The fingerprint is taken BEFORE inference, so a rewrite racing
+    *    the inference leaves an entry whose fingerprint is already
+    *    stale: the next read re-infers rather than serving it.
+    *
+    * Glob patterns are read bare: their listing is not a fixed set of
+    * files to fingerprint.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    if (path.exists("*?[{\\".contains(_))) s.read.parquet(path)
+    else {
+      val key = Substrate.canonicalDir(s, path)
+      val confs = s.conf.getAll.filter { case (k, _) => schemaConf(k) }
+      val fp = fingerprint(s, path)
+      schemas.get(key) match {
+        case SchemaMemo(`confs`, `fp`, schema) => s.read.schema(schema).parquet(path)
+        case _ =>
+          val df = s.read.parquet(path)
+          // a bound, not an eviction policy: graft reads a fixed set of
+          // tables and content-keyed leaves; this only caps a caller
+          // that streams through unbounded distinct paths
+          if (schemas.size >= MaxSchemas) schemas.clear()
+          schemas.put(key, SchemaMemo(confs, fp, df.schema))
+          df
+      }
+    }
+
+  private final case class SchemaMemo(confs: Map[String, String], fingerprint: String,
+                                      schema: StructType)
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, SchemaMemo]
+  private val MaxSchemas = 4096
+
+  private def schemaConf(k: String): Boolean =
+    k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+      k == "spark.sql.caseSensitive" ||
+      k == "spark.sql.sources.partitionColumnTypeInference.enabled"
+
+  /** Cheap listing fingerprint: MD5 over the sorted (relative path,
+    * length, mtime) triples of ALL files under `path` — recursive, so
+    * an in-place regeneration that only swaps leaf files deep inside a
+    * partitioned layout (dir/t.parquet/date=X/part-*) still changes
+    * the digest. No data bytes are read; on a remote FS this is one
+    * batched listFiles RPC per directory level. Shared by [[parquet]]
+    * and [[Substrate]]'s leaf keys.
+    */
+  private[graft] def fingerprint(s: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    if (fs.exists(p)) {
+      val base = fs.makeQualified(p).toUri.getPath
+      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val st = it.next()
+        val rel = st.getPath.toUri.getPath.stripPrefix(base)
+        buf += s"$rel|${st.getLen}|${st.getModificationTime}"
+      }
+      buf.sorted.foreach(line => md.update((line + "\n").getBytes("UTF-8")))
+    }
+    md.digest().map("%02x".format(_)).mkString.take(12)
+  }
+
   /** events loader, adaptive to how the driver generated `ts`:
     *
     *  - INT64 TIMESTAMP(NANOS): Spark's parquet reader rejects it outright
@@ -46,7 +132,7 @@ object Tables {
     */
   def events(s: SparkSession, dir: String): DataFrame = {
     val raw =
-      try s.read.parquet(s"$dir/events.parquet")
+      try parquet(s, s"$dir/events.parquet")
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if Option(e.getMessage).exists(_.contains("NANOS")) =>
@@ -76,7 +162,7 @@ object Tables {
     * AnalysisExceptions (the round-10 events outage, generalized).
     */
   def documents(s: SparkSession, dir: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/documents.parquet")
+    val df = parquet(s, s"$dir/documents.parquet")
     requireColumn(df, "documents", "doc_id") { case LongType | IntegerType => }
     requireColumn(df, "documents", "text") { case StringType => }
     // `lang` is consumed by a minority of operators (corpus_manifest,
@@ -89,7 +175,7 @@ object Tables {
     df
   }
   def embeddings(s: SparkSession, dir: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/embeddings.parquet")
+    val df = parquet(s, s"$dir/embeddings.parquet")
     requireColumn(df, "embeddings", "vec_id") { case LongType | IntegerType => }
     // strictly array<float>: the codegen'd vector expressions (graft_cosine,
     // graft_pq_encode, …) are typed for FloatType elements

@@ -102,11 +102,14 @@ object TextFunctions {
     * on every input, without materializing the match array. Resolves
     * through the session registry; registered by GraftExtensions at
     * session build, and defensively re-registered here off the active
-    * session for foreign sessions built without the extension.
+    * (else default) session for foreign sessions built without the
+    * extension. Building the Column needs no session: with none, the
+    * name resolves against whichever session later analyzes it.
     */
   def regexpCountNative(c: Column, pattern: String): Column = {
-    graft.plans.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
+    import org.apache.spark.sql.SparkSession
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(graft.plans.GraftFunctions.ensureRegistered)
     call_function("graft_regexp_count", c, lit(pattern))
   }
 

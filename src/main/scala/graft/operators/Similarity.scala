@@ -813,7 +813,7 @@ object Similarity {
             .otherwise(transform(col("embedding"), _ => lit(0).cast("byte")))
             .as("codes"))
     }
-    val codes = s.read.parquet(codesPath)
+    val codes = graft.Tables.parquet(s, codesPath)
     val scored = codes
       .join(broadcast(probes(emb)), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),

@@ -178,7 +178,7 @@ object TrainingOps {
       val isDir = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getFileStatus(hp).isDirectory
       val reader = s.readStream
-        .schema(s.read.parquet(docPath).schema)
+        .schema(graft.Tables.parquet(s, docPath).schema)
         .option("maxFilesPerTrigger", "1000000")
       val src = (if (isDir) reader.parquet(docPath)
                  else reader.option("pathGlobFilter", "documents.parquet").parquet(dir))
@@ -866,7 +866,7 @@ object TrainingOps {
         .distinct()
         .select(col("word"), size(symsMerged).cast("long").as("n_syms"))
     }
-    val encoded = s.read.parquet(vocabPath)
+    val encoded = graft.Tables.parquet(s, vocabPath)
     Tables.documents(s, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
       .filter(col("word") =!= "")

@@ -233,8 +233,8 @@ object EventStreams {
                                 bloomPath: String): DataFrame = {
     val s = delta.sparkSession
     graft.plans.GraftFunctions.ensureRegistered(s)
-    val sketch = s.read.parquet(bloomPath)
-    val baseHashes = s.read.parquet(hashesPath).select("content_hash")
+    val sketch = graft.Tables.parquet(s, bloomPath)
+    val baseHashes = graft.Tables.parquet(s, hashesPath).select("content_hash")
     screenThenVerify(delta, sketch, baseHashes)
   }
 
@@ -301,8 +301,8 @@ object EventStreams {
       .select(col("doc_id"), wordNgrams(col("toks"), shingleN).as("sh"))
       .select(col("doc_id"), transform(col("sh"), x => xxhash64(x)).as("hs"))
     val cachedDelta = graft.Caches.cached(hashedDelta)
-    val baseBands = s.read.parquet(bandsPath)
-    val baseShingles = s.read.parquet(shinglesPath)
+    val baseBands = graft.Tables.parquet(s, bandsPath)
+    val baseShingles = graft.Tables.parquet(s, shinglesPath)
     val deltaBands = cachedDelta.select(col("doc_id"),
       posexplode(call_function("graft_minhash_bands", col("hs"), lit(nPerms), lit(nBands)))
         .as(Seq("band_idx", "band_hash")))
@@ -463,8 +463,8 @@ object EventStreams {
     graft.plans.GraftFunctions.ensureRegistered(s)
     def scoreX1e6(a: Column, b: Column): Column =
       floor(call_function("graft_cosine", a, b) * 1e6).cast("long")
-    val centers = s.read.parquet(centroidsPath)
-    val postings = s.read.parquet(cellsPath)
+    val centers = graft.Tables.parquet(s, centroidsPath)
+    val postings = graft.Tables.parquet(s, cellsPath)
     val cellRank = Window.partitionBy("probe_id")
       .orderBy(col("cell_sim").desc, col("cell"))
     val probeCells = batch.select(col("probe_id"), col("probe_emb"))

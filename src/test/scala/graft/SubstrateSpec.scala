@@ -136,4 +136,30 @@ class SubstrateSpec extends AnyFunSuite with SparkFixture {
     val p2 = Substrate.materializedDir(spark, "spec_dir", corpus, Nil)(build)
     assert(p2 == p1 && builds == 1, "_SUCCESS-marked dir leaf must not rebuild")
   }
+
+  test("readFanout: a one-split leaf fans out to the default parallelism, a many-split leaf stays bare") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val target = spark.sparkContext.defaultParallelism
+    val dir = Files.createTempDirectory("graft_substrate_fanout").toString
+    val data = (1 to 64).map(_.toLong).toDF("v")
+    data.coalesce(1).write.parquet(s"$dir/one.parquet")
+    data.repartition(2 * target).write.parquet(s"$dir/many.parquet")
+    def fannedTo(path: String): Option[Int] =
+      Substrate.readFanout(spark, path).queryExecution.logical match {
+        case r: Repartition => Some(r.numPartitions)
+        case _              => None
+      }
+    // the planned-scan split count equals the RDD count it replaced
+    for (leaf <- Seq("one", "many")) {
+      val bare = spark.read.parquet(s"$dir/$leaf.parquet")
+      assert(Substrate.scanSplits(bare) == bare.rdd.getNumPartitions, leaf)
+    }
+    assert(Substrate.scanSplits(spark.read.parquet(s"$dir/one.parquet")) == 1)
+    assert(Substrate.scanSplits(spark.read.parquet(s"$dir/many.parquet")) >= target)
+    assert(fannedTo(s"$dir/one.parquet") == Some(target))
+    assert(fannedTo(s"$dir/many.parquet") == None)
+    assert(Substrate.readFanout(spark, s"$dir/one.parquet").as[Long].collect().sorted.toSeq ==
+      (1L to 64L))
+  }
 }

@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.Row
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -142,5 +145,122 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
     assert(Tables.documents(spark, sf).limit(1).count() == 1)
     assert(Tables.embeddings(spark, sf).limit(1).count() == 1)
     assert(Tables.events(spark, sf).limit(1).count() == 1)
+  }
+
+  // ---- Tables.parquet: the schema-memo reader --------------------------
+
+  /** Spark jobs launched while `body` runs, counted off a listener
+    * after the bus has drained.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusAccess.drain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("parquet: a memo hit launches no job and equals a bare read, flat and hive-partitioned") {
+    import spark.implicits._
+    val dir = tmp("memo_hit")
+    val data = Seq((1L, "a", 10), (2L, "b", 20), (3L, null, 10)).toDF("id", "s", "p")
+    data.coalesce(1).write.parquet(s"$dir/flat.parquet")
+    data.write.partitionBy("p").parquet(s"$dir/parted.parquet")
+    for (path <- Seq(s"$dir/flat.parquet", s"$dir/parted.parquet")) {
+      val (_, missJobs) = jobsDuring(Tables.parquet(spark, path))
+      assert(missJobs > 0, s"$path: a first read infers the schema with a job")
+      val (hit, hitJobs) = jobsDuring(Tables.parquet(spark, path))
+      assert(hitJobs == 0, s"$path: a memo hit must launch no Spark job")
+      val bare = spark.read.parquet(path)
+      // StructType equality covers names, types, order, nullability, metadata
+      assert(hit.schema == bare.schema, s"$path: ${hit.schema} vs ${bare.schema}")
+      assert(rows(hit) == rows(bare), path)
+    }
+    assert(spark.read.parquet(s"$dir/parted.parquet").schema.last.name == "p",
+      "the partitioned fixture must expose its partition column")
+  }
+
+  test("parquet: a table rewritten in place with an extra column is re-inferred") {
+    import spark.implicits._
+    val path = s"${tmp("memo_rewrite")}/t.parquet"
+    Seq((1L, "a")).toDF("id", "s").write.parquet(path)
+    assert(Tables.parquet(spark, path).columns.toSeq == Seq("id", "s"))
+    assert(Tables.parquet(spark, path).columns.toSeq == Seq("id", "s"))
+    Seq((2L, "b", 7.5)).toDF("id", "s", "x").write.mode("overwrite").parquet(path)
+    val after = Tables.parquet(spark, path)
+    assert(after.columns.toSeq == Seq("id", "s", "x"))
+    assert(rows(after) == Seq("[2,b,7.5]"))
+  }
+
+  /** An events table whose `ts` is INT64 TIMESTAMP(NANOS) — the
+    * encoding only `spark.sql.legacy.parquet.nanosAsLong` admits.
+    * Spark cannot write it, so the parquet example writer does.
+    */
+  private def writeTimestampNanos(dir: String): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-0.parquet")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try micros.foreach { case (id, us, _, _) =>
+      w.write(groups.newGroup().append("event_id", id).append("ts", us * 1000L))
+    } finally w.close()
+  }
+
+  test("parquet: flipping nanosAsLong re-infers events.ts instead of serving the memo") {
+    val dir = tmp("memo_nanos")
+    writeTimestampNanos(dir)
+    val path = s"$dir/events.parquet"
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      assert(Tables.parquet(spark, path).schema("ts").dataType == LongType)
+      assert(Tables.parquet(spark, path).schema("ts").dataType == LongType)
+      assert(load(dir).map(_._2) == micros.map(_._2 * 1000L))
+      spark.conf.set(key, "false")
+      val e = intercept[IllegalArgumentException](Tables.events(spark, dir))
+      assert(e.getMessage.contains("nanosAsLong"), e.getMessage)
+      spark.conf.set(key, "true")
+      assert(Tables.parquet(spark, path).schema("ts").dataType == LongType)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("parquet: four threads reading one path concurrently get one schema") {
+    import spark.implicits._
+    val path = s"${tmp("memo_threads")}/t.parquet"
+    Seq((1L, "a", Array(1.0f))).toDF("id", "s", "v").write.parquet(path)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futures = (1 to 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.types.StructType] {
+          def call() = { start.await(); Tables.parquet(spark, path).schema }
+        })
+      }
+      start.countDown()
+      val schemas = futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(schemas.distinct.size == 1)
+      assert(schemas.head == spark.read.parquet(path).schema)
+    } finally pool.shutdown()
   }
 }

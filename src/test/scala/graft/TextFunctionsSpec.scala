@@ -53,6 +53,22 @@ class TextFunctionsSpec extends AnyFunSuite with SparkFixture {
     assert(nulls.isNullAt(0) && nulls.isNullAt(1))
   }
 
+  test("regexpCountNative builds its Column with no active or default session") {
+    import org.apache.spark.sql.SparkSession
+    val pat = "[a-z]+|[0-9]+"
+    val c = {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      try regexpCountNative(col("text"), pat)
+      finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    }
+    // the session-free Column resolves once a session analyzes it
+    assert(one(c, "ab12 cd") == 3L)
+  }
+
   test("fingerprintKey collides for same token multiset, any order/dup/case") {
     val a = one(fingerprintKey(col("text")), "b a  a C")
     val b = one(fingerprintKey(col("text")), "c B a")
